@@ -18,24 +18,25 @@ construction (lazy `localCheckpoint` compiles its physical plan -- and
 captures the session conf -- at definition time, so the scope binds
 eager AND lazy loops):
 
-- `spark.sql.shuffle.partitions`: shrunk to ceil(rows /
-  SPARK_GRAFT_LOOP_ROWS_PER_PART) -- SHRINK-ONLY, never above the
-  session default, so a cluster session sized for 100 TB keeps its
-  partitioning whenever the state is actually large.
+- `spark.sql.shuffle.partitions`: shrunk to ceil(rows / ROWS_PER_PART)
+  -- SHRINK-ONLY, never above the session default, so a cluster
+  session sized for 100 TB keeps its partitioning whenever the state
+  is actually large.
 - `spark.sql.adaptive.enabled`: off only when the loop state is below
-  SPARK_GRAFT_LOOP_SMALL_ROWS rows. In that regime AQE's runtime
-  re-optimization can only re-discover what the row count already
-  proves (everything is one small partition's worth of data) while
-  charging per-stage latency for it; above the threshold AQE stays on
-  and keeps its skew-join splitting and coalescing.
+  SMALL_ROWS rows. In that regime AQE's runtime re-optimization can
+  only re-discover what the row count already proves (everything is
+  one small partition's worth of data) while charging per-stage
+  latency for it; above the threshold AQE stays on and keeps its
+  skew-join splitting and coalescing.
 
 The row count comes from `known_rows(df)`: a count OBSERVED for free
 on a checkpoint materialization job that was running anyway
 (`__spark_entry__._cached` stamps it; `observed_ckpt_eager` below does
-the same for operator-internal state), or a parquet-footer read for
-artifact-store tables. No extra Spark job is ever run to size the
-scope, and an unknown count means NO scoping -- session defaults, the
-safe cluster posture (the multimodal.python_stage_parallelism
+the same for operator-internal state). Tables read back from the
+artifact store (`SPARK_GRAFT_ARTIFACT_DIR`) carry no stamped count, so
+loops over them are not scoped. No extra Spark job is ever run to size
+the scope, and an unknown count means NO scoping -- session defaults,
+the safe cluster posture (the multimodal.python_stage_parallelism
 discipline: degrade to full scale-out, never below).
 """
 
@@ -49,6 +50,10 @@ from pyspark.sql import DataFrame
 from .checkpointing import stable_checkpoint
 
 _ROWS_ATTR = "_ccs_known_rows"
+# rows of loop state per shuffle partition
+ROWS_PER_PART = 200_000
+# below this many rows AQE is switched off inside the scope
+SMALL_ROWS = 4_000_000
 
 
 def stamp_rows(df: DataFrame, n_rows: int | None) -> DataFrame:
@@ -70,23 +75,15 @@ def observed_ckpt_eager(df: DataFrame) -> DataFrame:
     on the materialization job itself (zero extra jobs)."""
     from pyspark.sql import Observation, functions as F
 
+    if os.environ.get("SPARK_GRAFT_NO_CKPT"):
+        # plan-inspection escape: stable_checkpoint is the identity, so
+        # no job runs and Observation.get would wait forever
+        return stamp_rows(df, None)
     obs = Observation()
     out = stable_checkpoint(
         df.observe(obs, F.count(F.lit(1)).alias("n")), eager=True
     )
-    try:
-        n = obs.get["n"]
-    except Exception:
-        # SPARK_GRAFT_NO_CKPT plan-inspection escape: nothing ran
-        n = None
-    return stamp_rows(out, n)
-
-
-def _env_int(name: str, default: int) -> int:
-    try:
-        return int(os.environ.get(name, default))
-    except ValueError:
-        return default
+    return stamp_rows(out, obs.get["n"])
 
 
 @contextmanager
@@ -96,20 +93,17 @@ def small_state_scope(spark, n_rows: int | None):
     No-op when `n_rows` is None (unknown size: keep cluster defaults)
     or when the state is too large for either adjustment.
     """
-    if n_rows is None or os.environ.get("SPARK_GRAFT_LOOP_SCOPE") == "off":
-        # unknown size, or the A/B escape hatch: keep session defaults
+    if n_rows is None:
         yield
         return
     conf = spark.conf
-    rows_per_part = _env_int("SPARK_GRAFT_LOOP_ROWS_PER_PART", 200_000)
-    small_rows = _env_int("SPARK_GRAFT_LOOP_SMALL_ROWS", 4_000_000)
     prev_parts = conf.get("spark.sql.shuffle.partitions")
     prev_aqe = conf.get("spark.sql.adaptive.enabled")
-    target = max(1, -(-int(n_rows) // rows_per_part))
+    target = max(1, -(-int(n_rows) // ROWS_PER_PART))
     try:
         if target < int(prev_parts):
             conf.set("spark.sql.shuffle.partitions", str(target))
-        if int(n_rows) < small_rows:
+        if int(n_rows) < SMALL_ROWS:
             conf.set("spark.sql.adaptive.enabled", "false")
         yield
     finally:

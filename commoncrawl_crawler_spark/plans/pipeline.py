@@ -8,38 +8,92 @@ exist (CrawlPipelineStep.java:133-136,185-217) -- restart-safe
 incremental pipelines.
 
 Spark-first: a step is a function (spark, inputs) -> DataFrame whose
-output is written as parquet under <workdir>/<step>; the _SUCCESS
-marker is the completion check (atomic-commit, so a crashed step
-re-runs). Catalyst plans each step; the driver is plain topological
-ordering -- no scheduler machinery needed because Spark handles all
-intra-step parallelism.
+output is committed as parquet under <workdir>/<step> by
+`commit_once`, the one "commit once, reuse after" path shared with
+`ArtifactStore` and the query server's result cache
+(`plans/query_api.py`). A miss is written to a hidden staging sibling
+and moved into place with a no-clobber rename, so the final directory
+appears whole (its `_SUCCESS` marker included) or not at all, and
+concurrent misses on one path are safe: one rename wins and every
+loser reads the winner. Catalyst plans each step; the driver is plain
+topological ordering -- no scheduler machinery needed because Spark
+handles all intra-step parallelism.
 """
 
 from __future__ import annotations
 
-import os
+import uuid
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
-from collections.abc import Callable
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _success_exists(path: str, spark: SparkSession | None = None) -> bool:
-    """Scheme-aware _SUCCESS check: resolved through the Hadoop
-    FileSystem API when a session is available, so completion
-    skipping works on ANY Spark-writable workdir (s3a/abfss/hdfs/
-    file), the same fix as QueryServer.cached_results_available --
-    os.path.exists answers False off the local filesystem and every
-    step would silently rebuild. Bare local use (no active session)
-    falls back to the OS check."""
-    marker = f"{path.rstrip('/')}/_SUCCESS"
-    s = spark or SparkSession.getActiveSession()
-    if s is None:
-        return os.path.exists(marker)
-    p = s._jvm.org.apache.hadoop.fs.Path(marker)
-    return bool(
-        p.getFileSystem(s._jsc.hadoopConfiguration()).exists(p)
+def _success_exists(path: str, spark: SparkSession) -> bool:
+    """Scheme-aware _SUCCESS check, resolved through the Hadoop
+    FileSystem API so completion is seen on ANY Spark-writable URI
+    (s3a/abfss/hdfs/file) -- os.path.exists answers False off the
+    local filesystem and every commit would silently rebuild."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/_SUCCESS")
+    return bool(p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p))
+
+
+def commit_once(
+    spark: SparkSession, path: str, build: Callable[[], DataFrame]
+) -> tuple[DataFrame, bool]:
+    """Read the parquet committed at `path`, building and committing
+    it first when absent. Returns (DataFrame, whether this call built).
+
+    A miss writes `build()` to `<parent>/_staging-<name>-<uuid>` and
+    moves it onto `path` with `FileContext.rename(Options.Rename.NONE)`,
+    which refuses to clobber (`FileSystem.rename` instead nests the
+    source inside an existing directory). A lost race reads the
+    winner. Spark's listing skips `_`-prefixed names, so a staging dir
+    is never read as data.
+    """
+    if _success_exists(path, spark):
+        return spark.read.parquet(path), False
+    gateway = spark.sparkContext._gateway
+    conf = spark._jsc.hadoopConfiguration()
+    hfs = gateway.jvm.org.apache.hadoop.fs
+    final = hfs.Path(path)
+    staging = hfs.Path(
+        final.getParent(), f"_staging-{final.getName()}-{uuid.uuid4().hex}"
     )
+    # the local filesystem checks the destination and renames in two
+    # steps; a rename that loses the race in between falls back to a
+    # copy that lands HERE, inside the winner, instead of raising
+    nested = hfs.Path(final, staging.getName())
+    fs = final.getFileSystem(conf)
+    fc = hfs.FileContext.getFileContext(final.toUri(), conf)
+    no_clobber = gateway.new_array(hfs.Options.Rename, 1)
+    no_clobber[0] = hfs.Options.Rename.NONE
+
+    def rename() -> bool:
+        try:
+            fc.rename(staging, final, no_clobber)
+            return True
+        except Py4JJavaError as exc:
+            exists = "org.apache.hadoop.fs.FileAlreadyExistsException"
+            if not is_instance_of(gateway, exc.java_exception, exists):
+                raise
+            return False
+
+    try:
+        build().write.parquet(staging.toString())
+        moved = rename()
+        if not moved and not _success_exists(path, spark):
+            # a writer that committed in place crashed and left a
+            # final dir without _SUCCESS: replace it, once
+            fs.delete(final, True)
+            moved = rename()
+        built = moved and not fs.exists(nested)
+    finally:
+        fs.delete(staging, True)
+        fs.delete(nested, True)
+    return spark.read.parquet(path), built
 
 
 @dataclass
@@ -63,16 +117,8 @@ class PipelineTask:
         self.steps.append(step)
         return self
 
-    def _out(self, name: str) -> str:
-        # URI-style join: workdir may be an object-store prefix
-        return f"{self.workdir.rstrip('/')}/{name}"
-
-    def is_complete(
-        self, name: str, spark: SparkSession | None = None
-    ) -> bool:
-        return _success_exists(self._out(name), spark)
-
-    def _toposort(self) -> list[PipelineStep]:
+    def _toposort(self, roots: Iterable[str]) -> list[PipelineStep]:
+        """`roots` and their dependency closure, dependencies first."""
         by_name = {s.name: s for s in self.steps}
         seen: dict[str, int] = {}  # 0=visiting, 1=done
         order: list[PipelineStep] = []
@@ -91,51 +137,40 @@ class PipelineTask:
             seen[name] = 1
             order.append(by_name[name])
 
-        for s in self.steps:
-            visit(s.name)
+        for name in roots:
+            if name not in by_name:
+                raise ValueError(f"unknown step {name!r}")
+            visit(name)
         return order
+
+    def _run(
+        self, spark: SparkSession, roots: Iterable[str]
+    ) -> dict[str, DataFrame]:
+        outputs: dict[str, DataFrame] = {}
+        self.last_executed = []
+        for step in self._toposort(roots):
+            deps = {d: outputs[d] for d in step.deps}
+            outputs[step.name], built = commit_once(
+                spark,
+                f"{self.workdir.rstrip('/')}/{step.name}",
+                lambda: step.build(spark, deps),
+            )
+            if built:
+                self.last_executed.append(step.name)
+        return outputs
 
     def run_step(self, spark: SparkSession, name: str) -> DataFrame:
         """Run (or skip) a single step and its dependency closure --
         steps OUTSIDE the closure are untouched (no side effects for
         unrelated incomplete steps)."""
-        by_name = {s.name: s for s in self.steps}
-        if name not in by_name:
-            raise ValueError(f"unknown step {name!r}")
-        closure: set[str] = set()
-
-        def visit(n: str) -> None:
-            if n in closure:
-                return
-            closure.add(n)
-            for d in by_name[n].deps:
-                visit(d)
-
-        visit(name)
-        sub = PipelineTask(
-            self.workdir, [s for s in self.steps if s.name in closure]
-        )
-        outputs = sub.run(spark)
-        self.last_executed = sub.last_executed
-        return outputs[name]
+        return self._run(spark, [name])[name]
 
     def run(self, spark: SparkSession) -> dict[str, DataFrame]:
         """Run incomplete steps in dependency order; return all step
         outputs (read back from parquet, so lineage is truncated at
         step boundaries exactly like the reference's HDFS handoffs).
         Returns the executed step names in `self.last_executed`."""
-        outputs: dict[str, DataFrame] = {}
-        executed: list[str] = []
-        for step in self._toposort():
-            path = self._out(step.name)
-            if not self.is_complete(step.name, spark):
-                dep_outputs = {d: outputs[d] for d in step.deps}
-                df = step.build(spark, dep_outputs)
-                df.write.mode("overwrite").parquet(path)
-                executed.append(step.name)
-            outputs[step.name] = spark.read.parquet(path)
-        self.last_executed = executed
-        return outputs
+        return self._run(spark, [s.name for s in self.steps])
 
 
 @dataclass
@@ -151,22 +186,16 @@ class ArtifactStore:
     prior step's HDFS output keyed by database timestamp
     (CrawlPipelineStep.java:133-136,185-217).
 
-    Completion/atomicity reuse the pipeline-step contract (_SUCCESS
-    marker written by Spark's committer; a crashed build leaves no
-    marker and re-runs). Reads are plain parquet scans, so consumers
-    get pushdown/pruning against the artifact for free -- unlike a
-    session cache, which pins the whole table.
+    Commits go through `commit_once`: a build is staged in a hidden
+    sibling and renamed into place without clobbering, so an artifact
+    is whole or absent, a crashed build leaves nothing the next run
+    trusts, and two sessions building the same artifact at once both
+    end up reading one committed copy. Reads are plain parquet scans,
+    so consumers get pushdown/pruning against the artifact for free --
+    unlike a session cache, which pins the whole table.
     """
 
     workdir: str
-
-    def path(self, name: str) -> str:
-        return f"{self.workdir.rstrip('/')}/{name}"
-
-    def is_complete(
-        self, name: str, spark: SparkSession | None = None
-    ) -> bool:
-        return _success_exists(self.path(name), spark)
 
     def get_or_build(
         self,
@@ -176,9 +205,7 @@ class ArtifactStore:
     ) -> DataFrame:
         """Return the artifact, building + committing it only when
         absent. `self.last_built` records whether this call built."""
-        task = PipelineTask(self.workdir).add(
-            PipelineStep(name, lambda s, deps: build())
+        df, self.last_built = commit_once(
+            spark, f"{self.workdir.rstrip('/')}/{name}", build
         )
-        out = task.run(spark)[name]
-        self.last_built = bool(task.last_executed)
-        return out
+        return df

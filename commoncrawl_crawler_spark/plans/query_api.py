@@ -13,22 +13,27 @@ position-indexed file, pages served via readPaginatedResults
 Spark-first: the scatter, per-shard scan, merge-sort, and position
 index all disappear into `df.filter(rlike).orderBy(...)`; the piece
 worth keeping is the *canonical-id result cache* -- a query's sorted
-result is written once as parquet keyed by a hash of its normalized
+result is committed once as parquet keyed by a hash of its normalized
 parameters, and every later page read (any offset) is an
 O(page) read of that small cached table instead of a re-scan of the
 100 TB base. Distinct sort orders cache separately, exactly like the
 reference's pre-sorted NAME / PAGERANK index variants
-(query/DomainURLListQuery.java).
+(query/DomainURLListQuery.java). A miss commits through
+`plans.pipeline.commit_once`: the result is written to a hidden
+staging directory and renamed into place without clobbering, so
+concurrent misses on one canonical id are safe -- one commit wins and
+every other request reads it.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from .pipeline import _success_exists, commit_once
 
 
 @dataclass(frozen=True)
@@ -72,36 +77,42 @@ class QueryServer:
         return f"{self.cache_dir.rstrip('/')}/{qid}"
 
     def cached_results_available(self, qid: str) -> bool:
-        # _SUCCESS marker = fully written (atomic-commit protocol),
-        # mirroring cachedResultsAvailable()'s file-exists check.
-        # Resolved through the Hadoop FileSystem API so the check is
-        # scheme-correct on ANY Spark-writable URI (s3a/abfss/hdfs/
-        # file) -- os.path.exists would silently report False off the
-        # local filesystem and the cache would never hit.
-        jvm = self.spark._jvm
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{self._cache_path(qid)}/_SUCCESS"
-        )
-        fs = marker.getFileSystem(
-            self.spark._jsc.hadoopConfiguration()
-        )
-        return bool(fs.exists(marker))
+        # _SUCCESS marker = fully committed, mirroring
+        # cachedResultsAvailable()'s file-exists check on any
+        # Spark-writable URI
+        return _success_exists(self._cache_path(qid), self.spark)
 
-    def _materialize(self, qid: str, df: DataFrame) -> DataFrame:
-        path = self._cache_path(qid)
-        if not self.cached_results_available(qid):
-            df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
-
-    def _paginate(self, df: DataFrame, info: ClientQueryInfo) -> DataFrame:
-        order = [
-            F.col(info.sort_field).asc()
-            if info.ascending
-            else F.col(info.sort_field).desc()
-        ]
+    @staticmethod
+    def _order(info: ClientQueryInfo) -> list:
+        col = F.col(info.sort_field)
+        order = [col.asc() if info.ascending else col.desc()]
         if info.tiebreak:
             order.append(F.col(info.tiebreak).asc())
-        return df.orderBy(*order).offset(info.offset).limit(info.page_size)
+        return order
+
+    def _cached_page(
+        self,
+        query_type: str,
+        params: dict,
+        filtered: DataFrame,
+        info: ClientQueryInfo,
+    ) -> DataFrame:
+        """Commit `filtered` sorted by `info` once under the canonical id
+        of (query_type, params, sort spec); return the requested page."""
+        qid = canonical_query_id(
+            query_type,
+            {
+                **params,
+                "sort": info.sort_field,
+                "asc": info.ascending,
+                "tiebreak": info.tiebreak,
+            },
+        )
+        order = self._order(info)
+        cached, _ = commit_once(
+            self.spark, self._cache_path(qid), lambda: filtered.orderBy(*order)
+        )
+        return cached.orderBy(*order).offset(info.offset).limit(info.page_size)
 
     def domain_list_query(
         self,
@@ -116,25 +127,12 @@ class QueryServer:
         the cached parquet (PositionBasedSequenceFileIndex analog --
         parquet row groups give the same skip-to-offset behavior).
         """
-        qid = canonical_query_id(
+        return self._cached_page(
             "domain_list",
-            {
-                "pattern": pattern,
-                "sort": info.sort_field,
-                "asc": info.ascending,
-                "tiebreak": info.tiebreak,
-            },
+            {"pattern": pattern},
+            domains.filter(F.col("domain").rlike(pattern)),
+            info,
         )
-        filtered = domains.filter(F.col("domain").rlike(pattern))
-        order = [
-            F.col(info.sort_field).asc()
-            if info.ascending
-            else F.col(info.sort_field).desc()
-        ]
-        if info.tiebreak:
-            order.append(F.col(info.tiebreak).asc())
-        cached = self._materialize(qid, filtered.orderBy(*order))
-        return self._paginate(cached, info)
 
     def inverse_links_query(
         self, inverse: DataFrame, root: int, info: ClientQueryInfo
@@ -149,25 +147,12 @@ class QueryServer:
         the synthetic rootDomainHash (operators/graph.root_of)."""
         from ..operators.graph import ROOT_MOD
 
-        qid = canonical_query_id(
+        return self._cached_page(
             "inverse_links",
-            {
-                "root": root,
-                "sort": info.sort_field,
-                "asc": info.ascending,
-                "tiebreak": info.tiebreak,
-            },
+            {"root": root},
+            inverse.filter((F.col("dst") % ROOT_MOD) == root),
+            info,
         )
-        filtered = inverse.filter((F.col("dst") % ROOT_MOD) == root)
-        order = [
-            F.col(info.sort_field).asc()
-            if info.ascending
-            else F.col(info.sort_field).desc()
-        ]
-        if info.tiebreak:
-            order.append(F.col(info.tiebreak).asc())
-        cached = self._materialize(qid, filtered.orderBy(*order))
-        return self._paginate(cached, info)
 
     def url_detail_query(self, table: DataFrame, key_col: str, key) -> DataFrame:
         """Point lookup (URLLinksQuery's index seek analog).

@@ -81,3 +81,26 @@ def test_iterative_loop_exact_under_reliable(monkeypatch, tmp_path):
         for r in pagerank(edges, iterations=5).collect()
     )
     assert local_rows == rel_rows
+
+
+def test_observed_ckpt_eager_returns_under_no_ckpt(spark, monkeypatch):
+    """Under the plan-inspection escape no job runs, so nothing is
+    observed: the call must return an unstamped DataFrame instead of
+    waiting on Observation.get for an action that never comes."""
+    import threading
+
+    from commoncrawl_crawler_spark import loopscope
+
+    monkeypatch.setenv("SPARK_GRAFT_NO_CKPT", "1")
+    out = {}
+    t = threading.Thread(
+        target=lambda: out.update(
+            df=loopscope.observed_ckpt_eager(spark.range(5))
+        ),
+        daemon=True,
+    )
+    t.start()
+    t.join(timeout=60)
+    assert not t.is_alive(), "observed_ckpt_eager hung under SPARK_GRAFT_NO_CKPT"
+    assert loopscope.known_rows(out["df"]) is None
+    assert out["df"].count() == 5

@@ -249,3 +249,62 @@ def test_pipeline_completion_check_works_on_non_os_path_uri(
     assert again.last_executed == []  # skipped: completion seen via URI
     assert len(calls) == 1
     assert out["regions"].count() == 5
+
+
+def _dirs_under(path) -> list[str]:
+    import os
+
+    return sorted(
+        e for e in os.listdir(path) if os.path.isdir(os.path.join(path, e))
+    )
+
+
+def test_commit_loses_race_to_concurrent_winner(spark, tmp_path):
+    """A second committer finishing between this commit's _SUCCESS
+    check and its rename wins: both callers read the same committed
+    rows, nothing nests inside the committed dir and no staging dir
+    is left behind. The race is made deterministic by committing the
+    winner from inside the loser's own build."""
+    from commoncrawl_crawler_spark.plans.pipeline import ArtifactStore
+
+    def rows():
+        return spark.range(50).select(
+            F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+        )
+
+    winner = {}
+
+    def build():
+        store = ArtifactStore(str(tmp_path))
+        winner["df"] = store.get_or_build(spark, "shared", rows)
+        winner["built"] = store.last_built
+        return rows()
+
+    loser = ArtifactStore(str(tmp_path))
+    df = loser.get_or_build(spark, "shared", build)
+    assert winner["built"] is True and loser.last_built is False
+    expected = sorted(map(tuple, rows().collect()))
+    assert sorted(map(tuple, df.collect())) == expected
+    assert sorted(map(tuple, winner["df"].collect())) == expected
+    assert _dirs_under(tmp_path / "shared") == []
+    assert _dirs_under(tmp_path) == ["shared"]
+
+
+def test_leftover_without_success_marker_is_rebuilt(spark, tmp_path):
+    """A crash under a write-in-place commit can leave the final dir
+    with data files but no _SUCCESS: the next commit must replace it
+    with its own complete build, not trust or merge it."""
+    import os
+
+    from commoncrawl_crawler_spark.plans.pipeline import ArtifactStore
+
+    final = tmp_path / "art"
+    spark.range(1000, 1007).write.parquet(str(final))
+    os.remove(final / "_SUCCESS")
+
+    store = ArtifactStore(str(tmp_path))
+    df = store.get_or_build(spark, "art", lambda: spark.range(5))
+    assert store.last_built is True
+    assert sorted(r["id"] for r in df.collect()) == list(range(5))
+    assert (final / "_SUCCESS").exists()
+    assert _dirs_under(tmp_path) == ["art"]

@@ -108,6 +108,59 @@ def test_pagination_matches_full_sort(spark, tmp_path, sf_smoke):
     assert [r["domain"] for r in pages] == [r["domain"] for r in full]
 
 
+def test_concurrent_misses_on_one_qid_all_get_the_page(
+    spark, tmp_path, sf_smoke
+):
+    """Four requests miss the same canonical id at once: every one must
+    return the expected sorted page, the cache must end with exactly
+    one committed result and no staging leftovers."""
+    import os
+    import threading
+
+    domains = _domains(spark, sf_smoke).localCheckpoint(eager=True)
+    server = query_api.QueryServer(spark, str(tmp_path))
+    spec = query_api.ClientQueryInfo
+    cases = [
+        ("^src.*", spec("doc_count", False, 2, 4, "domain")),
+        ("^src[0-9]$", spec("total_chars", True, 0, 5, "domain")),
+    ]
+    for pattern, info in cases:
+        key = F.col(info.sort_field)
+        full = (
+            domains.filter(F.col("domain").rlike(pattern))
+            .orderBy(key.asc() if info.ascending else key.desc(), "domain")
+            .collect()
+        )
+        expected = full[info.offset:info.offset + info.page_size]
+        assert expected
+        barrier = threading.Barrier(4)
+        pages, errors = [], []
+
+        def request():
+            barrier.wait()
+            try:
+                page = server.domain_list_query(domains, pattern, info)
+                pages.append(page.collect())
+            except Exception as exc:  # reported below, not swallowed
+                errors.append(repr(exc))
+
+        threads = [threading.Thread(target=request) for _ in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert errors == []
+        assert pages == [expected] * 4
+    entries = sorted(os.listdir(tmp_path))
+    assert len(entries) == len(cases)
+    assert not any(e.startswith("_staging-") for e in entries)
+    for e in entries:
+        assert not any(
+            os.path.isdir(os.path.join(tmp_path, e, f))
+            for f in os.listdir(os.path.join(tmp_path, e))
+        )
+
+
 def test_parquet_sink_checkpointed_exactly_once(spark, tmp_path, sf_smoke):
     """File sink + checkpoint: draining twice must not duplicate rows
     (offsets are committed in the checkpoint, so run 2 sees no new
